@@ -70,26 +70,32 @@ object Bench {
     spark.sparkContext.addSparkListener(metrics)
     val warmMetrics = scala.collection.mutable.Map[String, Map[String, Long]]()
     val coldMetrics = scala.collection.mutable.Map[String, Map[String, Long]]()
+    // queries that threw in any timed run: reported by name, never timed
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
 
+    /** Elapsed seconds of one run of `name`, or None if it threw. */
     def timed(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         metricsSink: scala.collection.mutable.Map[String, Map[String, Long]] = warmMetrics)
-        : Double = {
+        : Option[Double] = {
       // drain the async bus so stale / in-flight events land on the
       // correct side of each snapshot boundary (a fixed sleep only made
       // the misattribution race rarer — round-12 advice #5)
       MetricsListener.drain(spark.sparkContext)
       metrics.snapshotAndReset() // drop events from warm-up / prior phases
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          false
+        }
       val elapsed = (System.nanoTime() - t0) / 1e9
       cleanup()
       MetricsListener.drain(spark.sparkContext)
       metricsSink(name) = metrics.snapshotAndReset()
-      elapsed
+      if (ok) Some(elapsed) else None
     }
 
     // Queries that serve fingerprint-keyed disk artifacts (models,
@@ -118,20 +124,21 @@ object Bench {
     // regression hunts (r7's a1 alarm). The driver's per-round call
     // stays at 1 run; round-close committed benches use 3.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt.max(1)
-    val samples: Seq[Map[String, Double]] =
-      (1 to runs).map { _ => selected.map { case (name, fn) => name -> timed(name, fn) }.toMap }
+    val samples: Seq[Map[String, Double]] = (1 to runs).map { _ =>
+      selected.flatMap { case (name, fn) => timed(name, fn).map(name -> _) }.toMap
+    }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
+    val timedOk = selected.keys.toSeq.filterNot(failed)
     val results: Seq[(String, Double)] =
-      selected.keys.toSeq.map(n => n -> median(samples.map(_(n))))
+      timedOk.map(n => n -> median(samples.map(_(n))))
     val spread: Seq[(String, (Double, Double))] =
-      selected.keys.toSeq.map(n =>
-        n -> (samples.map(_(n)).min, samples.map(_(n)).max))
+      timedOk.map(n => n -> (samples.map(_(n)).min, samples.map(_(n)).max))
 
-    val coldResults = artifactBacked.map { name =>
+    val coldResults = artifactBacked.flatMap { name =>
       val tmp = java.nio.file.Files
         .createTempDirectory(java.nio.file.Paths.get("target"), "bench-cold-")
       graft.queries.Topics.modelRootOverride = Some(tmp.toString)
@@ -143,7 +150,7 @@ object Bench {
           graft.queries.Topics.clearModelCache()
           org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
         }
-      name -> elapsed
+      elapsed.map(name -> _)
     }
 
     def jsonMap(m: Iterable[(String, Double)]): String =
@@ -170,8 +177,10 @@ object Bench {
     // are stamped unconditionally, so a one-run number can't be read as
     // a median after the fact
     val condJson = s""","runs":$runs,"aggregation":"${if (runs > 1) "median" else "single_run"}","sf_name":"$sfName""""
+    // queries that threw are listed here and left out of every timing
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString(",\"failed\":[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_with_cold":$totalWithCold,"queries":$qs,"cold_queries":$cold$spreadJson$condJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_with_cold":$totalWithCold,"queries":$qs,"cold_queries":$cold$spreadJson$condJson$failedJson,"sf":"$sfDir"}"""
     println(line)
     // the driver's log tail truncates long stdout (BENCH_r10.json's
     // `tail` cut mid-JSON, `parsed` null) — persist the full per-query
@@ -293,7 +302,7 @@ object Bench {
     }
     def summaryLine(nPerQuery: Int): String = {
       val perQ = perQueryEntries.take(nPerQuery).mkString("{", ",", "}")
-      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","total_with_cold":${math.rint(totalWithCold * 1000) / 1000},"n_queries":${results.size},"slowest":$slowest,"queries":$perQ$condJson$priorJson,"full":"$latestName","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","total_with_cold":${math.rint(totalWithCold * 1000) / 1000},"n_queries":${results.size},"slowest":$slowest,"queries":$perQ$condJson$failedJson$priorJson,"full":"$latestName","sf":"$sfDir"}"""
     }
     // exact fit: drop trailing (fastest) entries until the whole line is
     // under the 1900-byte safety margin of the driver's 2000-char tail
@@ -311,5 +320,7 @@ object Bench {
         s"timings already captured): ${e.getMessage}")
     }
     println(summaryLine(nPerQuery))
+    // a broken query must fail the run, not read as a fast one
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

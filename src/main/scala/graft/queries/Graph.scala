@@ -1,19 +1,31 @@
 package graft.queries
 
 import graft.{Checkpoints, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** Link-graph operators over the crawl corpus — the frontier-ranking
   * side of a scraping pipeline (the reference crawls page-by-page;
   * at 100 TB the crawler needs to ORDER its frontier, and PageRank
   * over the already-crawled link graph is the classic signal).
   *
-  * Iterative-graph discipline is the same as d7's connected
-  * components: one keyed shuffle per round, rank state re-materialized
-  * through tracked local checkpoints (flat lineage, superseded blocks
-  * released), never a driver-side adjacency structure.
+  * Two loop disciplines, never a driver-side adjacency structure:
+  *   - convergence-terminated loops (g1, g2) run one keyed shuffle per
+  *     round, re-materialized through tracked local checkpoints (flat
+  *     lineage, superseded blocks released) so the driver can test the
+  *     delta between rounds;
+  *   - fixed-round exact-integer loops (g1b, g2b, g3) run through
+  *     [[fixedRounds]]: edges and node state share one hash partitioner,
+  *     each round is a narrow per-partition step plus one map-side-
+  *     combined reduceByKey, and all rounds run inside the single job
+  *     that materializes the result.
   */
 object Graph {
 
@@ -154,6 +166,84 @@ object Graph {
     (ranks.df.select(col("id"), col("rank")), it)
   }
 
+  /** One pass of a [[fixedRounds]] round. `edges` holds (reader,
+    * target) pairs; every distinct edge reads its reader's state `v` and
+    * the reader's degree `d` in this edge list, sends `emit(v, d)` to its
+    * target, and each target `combine`s what it receives (map-side first)
+    * and `finish`es the total into its next state, the column `name` of
+    * the result. A node that no edge targets drops out of the state, as
+    * under an inner join.
+    */
+  private[queries] final case class Pass[C](name: String, edges: DataFrame,
+      emit: (Long, Long) => C, combine: (C, C) => C, finish: C => Long)(
+      implicit ct: ClassTag[C]) {
+
+    /** The distinct edges keyed by reader under `part`, each carrying
+      * its reader's degree. All copies of an edge share their reader's
+      * partition, so dedup and degree need no shuffle of their own.
+      */
+    private[Graph] def pin(part: Partitioner): RDD[(Long, (Long, Long))] =
+      edges.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)
+        .mapPartitions({ it =>
+          val es = mutable.HashSet.from(it)
+          val deg = mutable.LongMap.empty[Long]
+          es.foreach { case (k, _) => deg(k) = deg.getOrElse(k, 0L) + 1L }
+          es.iterator.map { case (k, t) => (k, (t, deg(k))) }
+        }, preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** One pass over `pinned`: the partition's state goes into a hash
+      * map and the partition's edges stream past it, so no key ever
+      * buffers its edges; one reduceByKey under the same partitioner
+      * yields the next state.
+      */
+    private[Graph] def step(pinned: RDD[(Long, (Long, Long))],
+        state: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      val (f, g, h) = (emit, combine, finish)
+      // keyed by target now, so the zip must not claim the partitioner
+      pinned.zipPartitions(state) { (es, vs) =>
+        val v = mutable.LongMap.from(vs)
+        es.flatMap { case (k, (t, d)) => v.get(k).map(x => (t, f(x, d))) }
+      }.reduceByKey(pinned.partitioner.get, g).mapValues(h)
+    }
+  }
+
+  /** Runs `rounds` rounds of `passes` from `init` (id, v) — each pass
+    * reads the state the previous pass produced — and returns the
+    * locally checkpointed frame (id, <each pass's name>) of the last
+    * round, over the ids every last-round pass reached.
+    *
+    * Edges and state share one HashPartitioner sized by the session's
+    * shuffle partitions, so a round is a narrow zip of pinned edges and
+    * state plus one map-side-combined shuffle per pass. The rounds are
+    * RDD lineage, not Catalyst plans, so nothing is re-analyzed or
+    * re-compiled per round, and they all run inside the one job that
+    * checkpoints the result; the pinned edges are released after it.
+    * Exact only for integer state: the combine order varies by run.
+    */
+  private[queries] def fixedRounds(init: DataFrame, rounds: Int,
+      passes: Pass[_]*): DataFrame = {
+    require(rounds >= 1 && passes.nonEmpty, "need at least one round and pass")
+    val s = init.sparkSession
+    val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val pinned = passes.map(_.pin(part))
+    try {
+      var state = init.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)
+      val last = new Array[RDD[(Long, Long)]](passes.size)
+      for (_ <- 1 to rounds; i <- passes.indices) {
+        state = passes(i).step(pinned(i), state)
+        last(i) = state
+      }
+      // co-partitioned joins are narrow: no shuffle past the last round
+      val rows = last.map(_.mapValues(Vector(_)))
+        .reduce((a, b) => a.join(b).mapValues { case (x, y) => x ++ y })
+        .map { case (id, vs) => Row.fromSeq(id +: vs) }
+      val schema = StructType((("id" +: passes.map(_.name)))
+        .map(StructField(_, LongType, nullable = false)))
+      Checkpoints.eager(s.createDataFrame(rows, schema)).df
+    } finally pinned.foreach(_.unpersist(blocking = false))
+  }
+
   // g1b fixed-point parameters: ranks live on an integer grid of
   // Scale⁻¹ (1e-12 of total mass), and the round count is FIXED — the
   // pair of choices that makes the iteration hash-twinnable (exact
@@ -162,11 +252,17 @@ object Graph {
   val G1bScale = 1000000000000L
   val G1bRounds = 10
 
+  /** The g1b/g2b half-step on the fixed-point grid: a target's next
+    * value is `base + (85 · Σ (v div d)) div 100` over its in-edges.
+    */
+  private def massPass(name: String, edges: DataFrame, base: Long): Pass[Long] =
+    Pass[Long](name, edges, (v, d) => v / d, _ + _, t => base + 85L * t / 100L)
+
   /** G1B: the hash-twinned PageRank variant — same graph family as g1
     * plus a ring edge (id → id+1 mod n) that guarantees every node has
-    * out-degree ≥ 1 (no dangling mass term) and in-degree ≥ 1 (the
-    * per-round groupBy(dst) covers all n nodes), so one round is
-    * EXACTLY one join + one grouped integer sum in both engines.
+    * out-degree ≥ 1 (no dangling mass term) and in-degree ≥ 1 (every
+    * round's sum covers all n nodes), so one round is EXACTLY one join +
+    * one grouped integer sum in both engines.
     *
     * Arithmetic is pure fixed-point: rank is BIGINT in units of 1e-12
     * of total mass; a round computes
@@ -181,10 +277,10 @@ object Graph {
     * g1 (convergence-terminated doubles) remains the declared scale
     * path — a fixed round count tuned at fixture scale does not
     * transfer to an unseen graph; g1b's role is the d10-style exact
-    * gate twin. Plan shape per round: one broadcast-or-shuffle join on
-    * src + one map-side-combined integer sum on dst; the static edge
-    * and degree tables are checkpointed once and released after the
-    * single materialization job.
+    * gate twin. The edge list is synthesized by DataFrame expressions;
+    * the rounds run through [[fixedRounds]] (one job for all
+    * [[G1bRounds]] rounds, pinned edges released after it), and the
+    * visible plan is a bounded top-k over the checkpointed ranks.
     */
   def g1bPageRankFixed(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
@@ -196,28 +292,10 @@ object Graph {
         (col("id") * 29 + 7) % n,
         (col("id") + 1) % n)).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-    // degree attached to the pinned edge row once (r17, g1's rationale)
-    // — 10 unrolled rounds each drop one keyed join from the plan, and
-    // integer arithmetic makes the restructure bit-exact for the twin
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df.join(
-      eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("deg")), Seq("src")))
-    eRaw.release()
     val base = (15L * G1bScale / 100L) / n
-    var ranks = docs.select(col("id"), lit(G1bScale / n).as("r"))
-    for (_ <- 1 to G1bRounds) {
-      ranks = eEdges.df
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), expr("r DIV deg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-        .select(col("id"), (lit(base) + expr("(85 * s) DIV 100")).as("r"))
-    }
-    // one materialization job (10 shuffle stages over the pinned edge
-    // blocks), then the static pin is safe to release
-    val fin = Checkpoints.eager(ranks)
-    eEdges.release()
-    fin.df.select(col("id").as("doc_id"), col("r").as("rank_e12"))
+    fixedRounds(docs.select(col("id"), lit(G1bScale / n)), G1bRounds,
+      massPass("rank_e12", edges, base))
+      .select(col("id").as("doc_id"), col("rank_e12"))
       .orderBy(col("rank_e12").desc, col("doc_id"))
       .limit(100)
   }
@@ -329,24 +407,14 @@ object Graph {
     * the L1-delta termination needs no normalization scalars at all.
     *
     * Loop discipline is g1's — each round is ONE job (the checkpoint
-    * materialization) plus ONE cached-block delta scan. Both dangling
-    * masses and the a'-half-step live INSIDE the round's single plan:
-    * they are 1-row aggregates crossJoined in, and the a' groupBy
-    * subtree (referenced by the hub join, the mA aggregate, and the
-    * final authority column) is deduplicated by ReuseExchange — the
-    * shuffle runs once. The checkpoint holds (id, hub, auth, |Δa|);
-    * superseded blocks are released, so executor storage carries one
-    * copy of the state at any time.
-    */
-  private[queries] def hitsFrame(nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = PrMaxIters,
-      nodeTol: Double = PrNodeTol): DataFrame =
-    hitsConverged(nodes, edges, maxIters, nodeTol)._1
-
-  /** Round-17 loop slimming, mirroring [[pageRankConverged]]'s:
-    * out-/in-degrees are ATTACHED to the pinned edge row once (the two
-    * per-round joins against corpus-sized degree tables are gone), and
-    * BOTH dangling masses are driver-side scalar recurrences — no
+    * materialization) plus ONE cached-block delta scan. The checkpoint
+    * holds (id, hub, auth, no_out, no_in, |Δa|); superseded blocks are
+    * released, so executor storage carries one copy of the state at any
+    * time.
+    *
+    * As in [[pageRankConverged]], out-/in-degrees are ATTACHED to the
+    * pinned edge row once (the two per-round joins against corpus-sized
+    * degree tables are gone), and BOTH dangling masses are driver-side scalar recurrences — no
     * per-round anti-joins, no per-round 1-row aggregate subtrees at all.
     *
     * The closed form: a node with no in-links receives no hub flow
@@ -465,8 +533,11 @@ object Graph {
     * nodes — beyond that, widen to a two-limb square, noted here so
     * the bound is explicit. g2 (convergence-terminated randomized
     * HITS) remains the declared scale path; g2b is its exact gate
-    * twin. Loop discipline is g1b's: static edge/degree tables
-    * checkpointed once, one final materialization job, pins released.
+    * twin. Loop discipline is g1b's: each round is two [[fixedRounds]]
+    * passes (the edge list pinned once keyed by src for the authority
+    * half-step and once keyed by dst for the hub half-step), all
+    * [[G2bRounds]] rounds run in one job, and the pins are released
+    * after it.
     */
   def g2bHitsFixed(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
@@ -477,34 +548,11 @@ object Graph {
       explode(array(sqDst(2654435761L, 1), sqDst(40503L, 7),
         sqDst(99991L, 13), expr(s"(id + 1) % $n"))).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-    // both degrees attached to the pinned edge row once (r17, g1b's
-    // rationale): 10 unrolled a/h round pairs each drop TWO keyed joins
-    // from the plan; integer arithmetic keeps the twin bit-exact
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df
-      .join(eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
-      .join(eRaw.df.groupBy(col("dst")).agg(count(lit(1)).as("ideg")), Seq("dst")))
-    eRaw.release()
     val epsBase = (15L * G1bScale / 100L) / n
-    var hubs = docs.select(col("id"), lit(G1bScale / n).as("h"))
-    var auths: DataFrame = null
-    for (_ <- 1 to G2bRounds) {
-      auths = eEdges.df
-        .join(hubs.select(col("id").as("src"), col("h")), Seq("src"))
-        .select(col("dst").as("id"), expr("h DIV odeg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-        .select(col("id"), (lit(epsBase) + expr("(85 * s) DIV 100")).as("a"))
-      hubs = eEdges.df
-        .join(auths.select(col("id").as("dst"), col("a")), Seq("dst"))
-        .select(col("src").as("id"), expr("a DIV ideg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-        .select(col("id"), (lit(epsBase) + expr("(85 * s) DIV 100")).as("h"))
-    }
-    val fin = Checkpoints.eager(hubs.join(auths, Seq("id")))
-    eEdges.release()
-    fin.df.select(col("id").as("doc_id"), col("a").as("auth_e12"),
-        col("h").as("hub_e12"))
+    fixedRounds(docs.select(col("id"), lit(G1bScale / n)), G2bRounds,
+      massPass("auth_e12", edges, epsBase),
+      massPass("hub_e12", edges.select(col("dst"), col("src")), epsBase))
+      .select(col("id").as("doc_id"), col("auth_e12"), col("hub_e12"))
       .orderBy(col("auth_e12").desc, col("doc_id"))
       .limit(100)
   }
@@ -516,7 +564,7 @@ object Graph {
     * round i−1 AND the static edge/degree tables compounds to ~3^rounds
     * copies of the edge derivation once inlined — measured 369 s at
     * sf0.01 un-materialized vs sub-second materialized. Spark's side
-    * needs no such hint (the loop checkpoints the statics once).
+    * needs no such hint (the loop pins the edge lists once).
     */
   val g2bSql: String = {
     val eps = s"(15 * $G1bScale // 100) // (SELECT n FROM nn)"
@@ -637,48 +685,39 @@ object Graph {
     * node has in-degree ≥ 1 and the per-round inner join covers all n
     * nodes (no keep-old-label outer path).
     *
-    * Scale shape per round: one keyed equi-join edges⋈labels on src
-    * (labels are (id, lbl) longs — text never enters the loop) + two
-    * map-side-combined integer aggregates (label counts per dst, then a
-    * struct-max argmax — NOT a per-node window). Lineage grows linearly
-    * (each round references the previous labels frame once); the static
-    * edge list is checkpointed once and released after the single final
-    * materialization, g1b's loop discipline.
+    * Scale shape per round: one [[fixedRounds]] pass (labels are
+    * (id, lbl) longs — text never enters the loop) whose map-side-
+    * combined vote counts per dst end in an integer argmax — NOT a
+    * per-node window. All [[G3Rounds]] rounds run in one job; the
+    * visible plan is the community-size aggregate and its bounded top-k
+    * over the checkpointed labels.
     */
   def g3LabelProp(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
     val n = docs.count()
     val out = plantedOut(docs, n)
-    val eEdges = Checkpoints.eager(
-      out.union(out.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    val fin = Checkpoints.eager(labelPropagate(
-      docs.select(col("id"), col("id").as("lbl")), eEdges.df, G3Rounds))
-    eEdges.release()
-    fin.df.groupBy(col("lbl")).agg(count(lit(1)).as("size"))
+    labelPropagate(docs.select(col("id"), col("id").as("lbl")),
+      out.union(out.select(col("dst").as("src"), col("src").as("dst"))), G3Rounds)
+      .groupBy(col("lbl")).agg(count(lit(1)).as("size"))
       .select(col("lbl").as("community"), col("size"))
       .orderBy(col("size").desc, col("community"))
       .limit(100)
   }
 
   /** `rounds` synchronous mode-label updates over (labels(id, lbl),
-    * edges(src, dst)); edges must already be symmetrized and cover
-    * every node as a dst. Per round: one keyed join + two map-side-
-    * combined integer aggregates; argmax(count, tie → smallest label)
-    * is a struct max, not a per-node window.
+    * edges(src, dst)), materialized as (id, lbl); edges are a set (a
+    * repeated edge votes once), already symmetrized so every node is a
+    * dst. Each dst counts its in-neighbors' labels map-side, then takes
+    * argmax(count, tie → smallest label).
     */
   private[queries] def labelPropagate(init: DataFrame, edges: DataFrame,
       rounds: Int): DataFrame = {
-    var labels = init
-    for (_ <- 1 to rounds) {
-      labels = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("nl"))).as("b"))
-        .select(col("dst").as("id"), (-col("b.nl")).as("lbl"))
+    val merge = (a: Map[Long, Long], b: Map[Long, Long]) => {
+      val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
+      small.foldLeft(big) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0L) + c) }
     }
-    labels
+    fixedRounds(init, rounds, Pass[Map[Long, Long]]("lbl", edges,
+      (l, _) => Map(l -> 1L), merge, _.minBy { case (l, c) => (-c, l) }._1))
   }
 
   /** The g3 twin: identical edge construction and G3Rounds unrolled

@@ -168,6 +168,96 @@ class GraphSpec extends AnyFunSuite {
       s"hits ($hIters rounds) leaked ${afterHits.size} persistent RDD pins")
   }
 
+  /** The fixture's doc ids and their count n — the inputs of every
+    * synthetic edge formula.
+    */
+  private def fixtureIds(): (Vector[Long], Long) = {
+    val ids = graft.Tables.documents(spark, TestSpark.sfDir).select("doc_id")
+      .collect().map(_.getLong(0)).toVector
+    (ids, ids.size.toLong)
+  }
+
+  /** One fixed-point half-step replayed on the driver: each target of
+    * a distinct (reader, target) edge gets
+    * base + (85 · Σ (v(reader) div deg(reader))) div 100.
+    */
+  private def massStep(edges: Seq[(Long, Long)], v: Map[Long, Long],
+      base: Long): Map[Long, Long] = {
+    val deg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    edges.collect { case (r, t) if v.contains(r) => t -> v(r) / deg(r) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .map { case (t, s) => t -> (base + 85L * s / 100L) }
+  }
+
+  test("g1b matches a driver-side replay of its integer recurrence exactly") {
+    val (ids, n) = fixtureIds()
+    val edges = ids.flatMap { id =>
+      Seq((id * 7 + 1) % n, (id * 13 + 3) % n, (id * 29 + 7) % n, (id + 1) % n)
+        .filter(_ != id).map(id -> _)
+    }.distinct
+    val base = (15L * Graph.G1bScale / 100L) / n
+    var r = ids.map(_ -> Graph.G1bScale / n).toMap
+    for (_ <- 1 to Graph.G1bRounds) r = massStep(edges, r, base)
+    val expected = r.toSeq.sortBy { case (id, v) => (-v, id) }.take(100)
+    val got = Graph.g1bPageRankFixed(spark, TestSpark.sfDir).collect()
+      .map(x => x.getLong(0) -> x.getLong(1)).toSeq
+    assert(got.length === 100)
+    assert(got === expected)
+  }
+
+  test("g2b matches a driver-side replay of its integer half-steps exactly") {
+    val (ids, n) = fixtureIds()
+    def sq(id: Long, mult: Long, add: Long) = {
+      val x = (id * mult + add) % n
+      x * x / n
+    }
+    val edges = ids.flatMap { id =>
+      Seq(sq(id, 2654435761L, 1), sq(id, 40503L, 7), sq(id, 99991L, 13),
+        (id + 1) % n).filter(_ != id).map(id -> _)
+    }.distinct
+    val back = edges.map(_.swap)
+    val eps = (15L * Graph.G1bScale / 100L) / n
+    var h = ids.map(_ -> Graph.G1bScale / n).toMap
+    var a = Map.empty[Long, Long]
+    for (_ <- 1 to Graph.G2bRounds) {
+      a = massStep(edges, h, eps)
+      h = massStep(back, a, eps)
+    }
+    val expected = a.keySet.intersect(h.keySet).toSeq
+      .map(id => (id, a(id), h(id))).sortBy(x => (-x._2, x._1)).take(100)
+    val got = Graph.g2bHitsFixed(spark, TestSpark.sfDir).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
+    assert(got.length === 100)
+    assert(got === expected)
+  }
+
+  test("fixedRounds runs all rounds in one job and releases its pinned edges") {
+    // 2 rounds and 10 rounds cost the same one job: extra rounds are
+    // extra stages inside it, not extra jobs
+    val edges = ((0L until 40L).map(i => i -> ((i + 1) % 40)) ++
+      (0L until 40L by 3).map(i => i -> ((i * 7 + 2) % 40)))
+      .filter(e => e._1 != e._2).toDF("src", "dst")
+    val init = (0L until 40L).map(i => (i, 1000000L)).toDF("id", "v")
+    val sc = spark.sparkContext
+    def run(rounds: Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val (df, stages) = TestSpark.jobStages(Graph.fixedRounds(init, rounds,
+        Graph.Pass[Long]("v", edges, (v, d) => v / d, _ + _, s => 7L + s)))
+      val pinned = sc.getPersistentRDDs.keySet -- before
+      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, stages, pinned)
+    }
+    val (r2, s2, p2) = run(2)
+    val (r10, s10, p10) = run(10)
+    assert(s2.length === 1 && s10.length === 1,
+      s"jobs at 2 rounds: $s2, at 10 rounds: $s10")
+    assert(s10.head > s2.head, s"stages at 2 rounds: $s2, at 10 rounds: $s10")
+    // only the materialized result stays pinned
+    assert(p2.size <= 1 && p10.size <= 1, s"pins left: $p2, $p10")
+    // every node has an in-edge (the ring), so every node keeps a state
+    assert(r2.size === 40 && r10.size === 40)
+    assert(r2 != r10)
+  }
+
   test("label propagation recovers disjoint planted components exactly") {
     // two triangles {0,1,2} and {10,11,12}: after 2 rounds every node
     // holds its component's minimum id (mode over 2 neighbors ties at

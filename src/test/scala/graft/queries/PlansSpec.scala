@@ -433,10 +433,15 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("g1b fixed-point rounds: no cartesian, top-100 via TakeOrderedAndProject") {
-    val plan = executedPlan(Graph.g1bPageRankFixed(spark, dir))
-    // the 10 rounds live behind the final checkpoint; the visible plan
-    // must be the bounded top-k over the pinned rank blocks
+    val (df, stages) = TestSpark.jobStages(Graph.g1bPageRankFixed(spark, dir))
+    // the build runs every round inside ONE job (one stage per round
+    // plus the input shuffles); any other build job is a small scan
+    assert(stages.count(_ > Graph.G1bRounds) === 1, s"job stage counts: $stages")
+    val plan = executedPlan(df)
+    // the visible plan is the bounded top-k over the materialized rank
+    // state: no round, so no exchange, survives into it
     assert(plan.contains("TakeOrderedAndProject"), plan.take(300))
+    assert(!plan.contains("Exchange"), plan.take(600))
     assert(!plan.contains("CartesianProduct"))
   }
 
@@ -487,10 +492,15 @@ class PlansSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), "zone assignment must not sort/window")
   }
 
-  test("g3 rounds argmax via struct max partials, never a per-node window") {
-    val plan = executedPlan(Graph.g3LabelProp(spark, dir))
-    assert(!plan.contains("Window"), "label argmax degraded to a window")
+  test("g3 label rounds run as one job; community sizes are a bounded top-k") {
+    val (df, stages) = TestSpark.jobStages(Graph.g3LabelProp(spark, dir))
+    assert(stages.count(_ > Graph.G3Rounds) === 1, s"job stage counts: $stages")
+    val plan = executedPlan(df)
+    // over the materialized labels: a map-side-combined size count and
+    // a bounded top-k, never a per-node window
+    assert(plan.contains("partial_count"), plan.take(600))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(300))
+    assert(!plan.contains("Window"), "label counts degraded to a window")
   }
 
   test("w13 anomaly window is keyed by event_type above the daily aggregation") {
